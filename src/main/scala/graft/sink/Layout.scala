@@ -76,18 +76,20 @@ object Layout {
     // of the lineage (the source's offset paging is not snapshot-
     // consistent; the filename count must match the file's contents).
     val errCached = err.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val errRows = errCached.count()
-    val errPath =
-      if (errRows == 0) None
-      else {
-        val headerless = errCached.toDF(err.columns.indices.map(_.toString): _*)
-        val errDir = dirPath(root, isErr = true, fmt, table, ts)
-        writeOne(headerless, errDir, fmt, singleFile,
-          renameTo = if (singleFile) Some(errFileName(table, fmt))
-                     else None)
-        Some(errDir)
-      }
-    errCached.unpersist(blocking = false)
+    val (errRows, errPath) =
+      try {
+        val n = errCached.count()
+        if (n == 0) (0L, None)
+        else {
+          val headerless =
+            errCached.toDF(err.columns.indices.map(_.toString): _*)
+          val errDir = dirPath(root, isErr = true, fmt, table, ts)
+          writeOne(headerless, errDir, fmt, singleFile,
+            renameTo = if (singleFile) Some(errFileName(table, fmt))
+                       else None)
+          (n, Some(errDir))
+        }
+      } finally errCached.unpersist(blocking = false)
     WriteResult(goodDir, errPath, goodRows, errRows, cumulative)
   }
 

@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Targeted key deletion over a clustered parquet table — the
   * right-to-be-forgotten operation: remove every row of a set of keys
@@ -137,13 +138,22 @@ object TargetedDelete {
       }
     }
 
-  /** The (min, max) footer statistics of an INT64 column across all row
-    * groups of one parquet file; None when any row group lacks stats. */
-  private[sink] def keyRange(conf: Configuration, file: Path,
-                             keyCol: String): Option[(Long, Long)] = {
+  /** What one footer open yields: the file's row count, the key
+    * column's (min, max) statistics (None when any row group lacks
+    * them) and the table schema Spark's writer stores in the footer
+    * (None for files other writers produced). */
+  private[sink] final case class Footer(rows: Long,
+                                        keyRange: Option[(Long, Long)],
+                                        sparkSchema: Option[StructType])
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private[sink] def footer(conf: Configuration, file: Path,
+                           keyCol: String): Footer = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     try {
-      val ranges = reader.getFooter.getBlocks.asScala.toSeq.map { block =>
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val ranges = blocks.map { block =>
         block.getColumns.asScala
           .find(_.getPath.toDotString == keyCol)
           .map(_.getStatistics)
@@ -151,8 +161,20 @@ object TargetedDelete {
           .map(st => (st.genericGetMin.asInstanceOf[Number].longValue(),
             st.genericGetMax.asInstanceOf[Number].longValue()))
       }
-      if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
-      else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
+      val range =
+        if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
+        else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
+      val schema = Option(reader.getFooter.getFileMetaData
+        .getKeyValueMetaData.get(SparkSchemaKey))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+      Footer(blocks.map(_.getRowCount).sum, range, schema)
     } finally reader.close()
   }
+
+  /** The (min, max) footer statistics of an integral key column across
+    * all row groups of one parquet file; None when any row group lacks
+    * stats. */
+  private[sink] def keyRange(conf: Configuration, file: Path,
+                             keyCol: String): Option[(Long, Long)] =
+    footer(conf, file, keyCol).keyRange
 }

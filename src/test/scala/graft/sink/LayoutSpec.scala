@@ -88,6 +88,18 @@ class LayoutSpec extends AnyFunSuite {
       Seq((1L, "A"), (2L, "B"), (3L, "C")))
   }
 
+  test("a failed err write still releases the cached err frame") {
+    val root = freshRoot()
+    // a plain file where the err tree must go: the err write fails
+    Files.createFile(Paths.get(s"$root/result-err"))
+    val failingErr = Seq(("9`Z`leak", 3)).toDF("wa", "arity")
+    intercept[Exception] {
+      Layout.writeDual(good, failingErr, root, "parquet", "ztab", ts)
+    }
+    assert(failingErr.storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("q06 driver entry lists the written files (smoke)") {
     val df = Layout.q06SinkLayout(spark, graft.SparkTestBase.Sf0001)
     val paths = df.as[String].collect().toSeq

@@ -5,6 +5,7 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +16,9 @@ import graft.ops.T
   * footer-pruned touch set, byte-identical untouched files, floor
   * routing of gap/beyond-end inserts, preserved range-disjointness,
   * convergent replay, the no-actual-hit tombstone no-op, the
-  * compacted-batch guard, and crash heal. */
+  * compacted-batch and null-key guards, the all-rows-deleted empty
+  * replacement, key-width independence, the per-batch Spark job
+  * budget, and crash heal. */
 class MergeIntoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -49,7 +52,42 @@ class MergeIntoSpec extends AnyFunSuite {
 
   private def snapshot(out: String): Set[(Long, Long)] =
     spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+      .map(r => (r.getAs[Number](0).longValue(),
+        r.getAs[Number](1).longValue())).toSet
+
+  private def parquetFiles(out: String): Seq[java.io.File] =
+    new java.io.File(out).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+
+  /** Spark jobs `body` starts on this thread: its jobs carry a local
+    * property; a marker job afterwards flushes the asynchronous
+    * listener bus (events reach a listener in posting order). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.jobProbe"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("body")   => jobs.incrementAndGet()
+          case Some("marker") => flushed.countDown()
+          case _              => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      try body finally sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      jobs.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("matched update / not-matched insert / tombstone delete land on " +
     "exactly the routed files; everything else is byte-identical") {
@@ -120,6 +158,80 @@ class MergeIntoSpec extends AnyFunSuite {
         batch(Seq((210L, 1L, "U"), (210L, 0L, "D"))))
     }
     assert(e.getMessage.contains("compact"))
+  }
+
+  test("a batch with a null key or an unknown op is refused loudly and " +
+    "changes nothing") {
+    import spark.implicits._
+    val out = freshTable()
+    val hashesBefore = fileHashes(out)
+    val nullKeyed = Seq((Some(210L), 1L, "U"), (None, 2L, "U"))
+      .toDF("k", "v", "op")
+    val e = intercept[IllegalArgumentException] {
+      MergeInto.merge(spark, out, "k", nullKeyed)
+    }
+    assert(e.getMessage.contains("null k"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      MergeInto.merge(spark, out, "k", batch(Seq((210L, 1L, "X"))))
+    }
+    assert(e2.getMessage.contains("'U'"), e2.getMessage)
+    assert(fileHashes(out) == hashesBefore)
+  }
+
+  test("a batch of local rows touching several files costs at most two " +
+    "Spark jobs") {
+    val out = freshTable()
+    val b = batch(Seq((210L, 1L, "U"), (510L, 0L, "D"), (95L, 95L, "U"),
+      (5000L, 5000L, "U"), (45L, 0L, "D")))
+    var rep: MergeInto.MergeReport = null
+    val jobs = jobsDuring { rep = MergeInto.merge(spark, out, "k", b) }
+    assert(rep.filesAffected == 4 && rep.filesRewritten == 4, rep.toString)
+    assert(jobs <= 2, s"merge ran $jobs Spark jobs")
+  }
+
+  test("deleting every row of one file leaves a schema-only replacement " +
+    "that a later merge skips as an empty, stat-less file") {
+    val out = freshTable()
+    val first = parquetFiles(out).head
+    val schema = spark.read.parquet(out).schema
+    val rep = MergeInto.merge(spark, out, "k",
+      batch((0L until 100L by 10L).map(k => (k, 0L, "D"))))
+    assert(rep.filesRewritten == 1 && rep.rowsDeleted == 10L, rep.toString)
+    assert(first.exists(), "the emptied file keeps its name")
+    val conf = spark.sessionState.newHadoopConf()
+    val emptied = new org.apache.hadoop.fs.Path(first.toString)
+    assert(TargetedDelete.keyRange(conf, emptied, "k").isEmpty)
+    val emptyRead = spark.read.parquet(first.toString)
+    assert(emptyRead.schema == schema && emptyRead.isEmpty)
+    val afterDelete = snapshot(out)
+    assert(afterDelete == (100L until 800L by 10L).map(k => (k, k)).toSet)
+    // the emptied file takes no routes: key 5 floors to the first
+    // non-empty file, and the empty file keeps its bytes
+    val emptyHash = md5(first.toPath)
+    val rep2 = MergeInto.merge(spark, out, "k", batch(Seq((5L, 5L, "U"))))
+    assert(rep2.filesRewritten == 1 && rep2.rowsInserted == 1L,
+      rep2.toString)
+    assert(md5(first.toPath) == emptyHash)
+    assert(snapshot(out) == afterDelete + ((5L, 5L)))
+  }
+
+  test("an IntegerType key merges with the same results as LongType") {
+    import spark.implicits._
+    val longOut = freshTable()
+    val intOut = Files.createTempDirectory("graft-merge-spec-int-").toString
+    ClusteredWrite.parquet(
+      (0 until 800 by 10).map(k => (k, k)).toDF("k", "v"), intOut, 8,
+      col("k"))
+    val changes = Seq((210, 9999, "U"), (510, 0, "D"), (215, 215, "U"),
+      (95, 95, "U"), (5000, 5000, "U"), (-50, -50, "U"), (45, 0, "D"))
+    val intRep = MergeInto.merge(spark, intOut, "k",
+      changes.toDF("k", "v", "op"))
+    val longRep = MergeInto.merge(spark, longOut, "k",
+      batch(changes.map { case (k, v, op) => (k.toLong, v.toLong, op) }))
+    assert(intRep == longRep)
+    assert(spark.read.parquet(intOut).schema("k").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(snapshot(intOut) == snapshot(longOut))
   }
 
   test("a crash between the two swap renames heals before new work: " +

@@ -8,7 +8,9 @@ import graft.sink.Layout
   * reference's entire Glue script (`pyrfc_read_table.py`): read one SAP
   * table through the `sap-rfc` source, split good/err rows, write both
   * to the dated dual layout, print row-count telemetry (R12,
-  * `pyrfc_read_table.py:119-122,151-153`).
+  * `pyrfc_read_table.py:119-122,151-153`). The good and err sides land as
+  * two Spark writes that run at the same time, each counting its own rows
+  * (`Layout.writeDual`).
   *
   * Usage:
   * {{{

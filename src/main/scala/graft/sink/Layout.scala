@@ -1,6 +1,8 @@
 package graft.sink
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
+import java.util.concurrent.{ExecutionException, FutureTask}
 
 import scala.jdk.CollectionConverters._
 
@@ -18,11 +20,15 @@ import org.apache.spark.sql.functions._
   *    integer headers (`:186,197`) — modeled as columns renamed `"0".."n-1"`;
   *  - the err file is created **only when** `err_count > 0` (`:185,196,220`).
   *
-  * One `write` call here ≙ one reference page upload: the single-object-
-  * per-page contract is preserved with `coalesce(1)` + rename. At cluster
-  * scale a caller keeps Spark's one-file-per-task layout instead (pass
-  * `singleFile = false`); the dated directory scheme is unchanged and the
-  * cumulative count then lives only in [[WriteResult]].
+  * One `writeDual` call ≙ one reference page upload: the single-object-
+  * per-page contract is preserved with `coalesce(1)`, a write into a hidden
+  * staging directory under `root` (`.staging-<uuid>/`), and a publish by
+  * move of the one part file into the dated directory. The move replaces
+  * only a file of the same name, so the pages of one pull accumulate in
+  * their dated directory and re-running a page replaces its own file. At
+  * cluster scale a caller keeps Spark's one-file-per-task layout instead
+  * (pass `singleFile = false`); the dated directory scheme is unchanged and
+  * the cumulative count then lives only in [[WriteResult]].
   */
 object Layout {
 
@@ -50,7 +56,21 @@ object Layout {
     * `partitionCols` adds hive-style partition directories under the dated
     * path for the good side — a capability the reference lacks (SURVEY.md
     * §1.2) and the scale path for selective downstream reads; it implies
-    * the multi-file layout (no single-object rename). */
+    * the multi-file layout (no single-object rename), written straight
+    * into the dated directory with `mode("overwrite")`.
+    *
+    * The two sides are two Spark jobs that run at the same time: the err
+    * write on a thread started here, so it inherits the caller's Spark
+    * local properties (job group, scheduler pool), and the good write on
+    * the calling thread. Each side counts its rows with an `Observation`
+    * in its own write, so the filename count and the err-presence rule
+    * see exactly the rows the file holds, with no separate count job.
+    * Both sides are staged and published only when both writes succeeded;
+    * an err side of 0 rows publishes nothing. A good page of 0 rows never
+    * replaces an existing file of the same name (the previous page's).
+    * The staging directory is removed on every path. A failed good write
+    * waits for the err write and rethrows the good write's exception; a
+    * failed err write rethrows its own. */
   def writeDual(good: DataFrame, err: DataFrame, root: String, fmt: String,
                 table: String, ts: String, cumulativeBefore: Long = 0L,
                 singleFile: Boolean = true,
@@ -59,70 +79,94 @@ object Layout {
     require(partitionCols.isEmpty || !singleFile,
       "partitionCols implies singleFile = false")
 
-    // good-side row count via Observation: one pass instead of a
-    // count() scan followed by the write scan (matters at 100 TB)
-    val obs = Observation()
     val goodDir = dirPath(root, isErr = false, fmt, table, ts)
-    writeOne(good.observe(obs, count(lit(1)).as("rows")), goodDir, fmt,
-      singleFile, renameTo = None, partitionCols = partitionCols)
-    val goodRows = obs.get("rows").asInstanceOf[Long]
-    val cumulative = cumulativeBefore + goodRows
-    if (singleFile)
-      renameSingle(goodDir, dataFileName(table, cumulative, fmt))
+    val errDir = dirPath(root, isErr = true, fmt, table, ts)
+    val staging = Paths.get(root, s".staging-${UUID.randomUUID()}")
+    val goodStage = staging.resolve("good")
+    val errStage = staging.resolve("err")
 
-    // Err quirks: only materialize when non-empty (`:185,196,220`), and
-    // drop the column names — integer headers like pandas (`:186,197`).
-    // Persisted across the count and the write so both see one snapshot
-    // of the lineage (the source's offset paging is not snapshot-
-    // consistent; the filename count must match the file's contents).
-    val errCached = err.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (errRows, errPath) =
-      try {
-        val n = errCached.count()
-        if (n == 0) (0L, None)
+    // err quirk: no column names — integer headers like pandas (`:186,197`)
+    val headerless = err.toDF(err.columns.indices.map(_.toString): _*)
+    val errWrite = new FutureTask[Long](() =>
+      writeCounted(headerless, errStage.toString, fmt, singleFile))
+    val errThread = new Thread(errWrite, s"graft-layout-err-$table")
+    errThread.setDaemon(true)
+    errThread.start()
+    try {
+      val goodOut = if (singleFile) goodStage.toString else goodDir
+      val goodRows =
+        try writeCounted(good, goodOut, fmt, singleFile, partitionCols)
+        catch { case e: Throwable => errThread.join(); throw e }
+      val errRows =
+        try errWrite.get()
+        catch { case e: ExecutionException => throw e.getCause }
+
+      val cumulative = cumulativeBefore + goodRows
+      if (singleFile)
+        publishFile(goodStage, Paths.get(goodDir),
+          dataFileName(table, cumulative, fmt), replace = goodRows > 0)
+      // err quirk: only materialize when non-empty (`:185,196,220`)
+      val errPath =
+        if (errRows == 0) None
         else {
-          val headerless =
-            errCached.toDF(err.columns.indices.map(_.toString): _*)
-          val errDir = dirPath(root, isErr = true, fmt, table, ts)
-          writeOne(headerless, errDir, fmt, singleFile,
-            renameTo = if (singleFile) Some(errFileName(table, fmt))
-                       else None)
-          (n, Some(errDir))
+          if (singleFile)
+            publishFile(errStage, Paths.get(errDir), errFileName(table, fmt),
+              replace = true)
+          else {
+            deleteTree(Paths.get(errDir))
+            Files.createDirectories(Paths.get(errDir).getParent)
+            Files.move(errStage, Paths.get(errDir))
+          }
+          Some(errDir)
         }
-      } finally errCached.unpersist(blocking = false)
-    WriteResult(goodDir, errPath, goodRows, errRows, cumulative)
+      WriteResult(goodDir, errPath, goodRows, errRows, cumulative)
+    } finally deleteTree(staging)
   }
 
-  private def writeOne(df: DataFrame, dir: String, fmt: String,
-                       singleFile: Boolean, renameTo: Option[String],
-                       partitionCols: Seq[String] = Nil): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
+  /** Writes `df` to `dir` and returns its row count, observed in the same
+    * pass as the write (one scan, and a count of exactly the rows written
+    * even when the source is not snapshot-consistent). */
+  private def writeCounted(df: DataFrame, dir: String, fmt: String,
+                           singleFile: Boolean,
+                           partitionCols: Seq[String] = Nil): Long = {
+    val obs = Observation()
+    val observed = df.observe(obs, count(lit(1)).as("rows"))
+    val out = if (singleFile) observed.coalesce(1) else observed
     val writer = out.write.mode("overwrite").partitionBy(partitionCols: _*)
     fmt match {
       case "json"    => writer.json(dir)
       case "parquet" => writer.parquet(dir)
     }
-    renameTo.foreach(renameSingle(dir, _))
+    obs.get("rows").asInstanceOf[Long]
   }
 
-  private def renameSingle(dir: String, name: String): Unit = {
-    val d = Paths.get(dir)
-    def withListing[A](f: List[Path] => A): A = {
-      val s = Files.list(d)
-      try f(s.iterator().asScala.toList) finally s.close()
-    }
-    val part = withListing(
-      _.filter(_.getFileName.toString.startsWith("part-"))) match {
+  /** Moves the one part file Spark wrote into `stage` to `dir/name` — one
+    * object per page, like the reference's put_object (`:210-221`). With
+    * `replace = false` an existing `dir/name` is kept. */
+  private def publishFile(stage: Path, dir: Path, name: String,
+                          replace: Boolean): Unit = {
+    val target = dir.resolve(name)
+    if (replace || !Files.exists(target)) {
+      val s = Files.list(stage)
+      val parts =
+        try s.iterator().asScala
+          .filter(_.getFileName.toString.startsWith("part-")).toList
+        finally s.close()
+      val part = parts match {
         case one :: Nil => one
-        case other => sys.error(s"expected 1 part file in $dir, got $other")
+        case other => sys.error(s"expected 1 part file in $stage, got $other")
       }
-    Files.move(part, d.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-    // one object per page, like the reference's put_object (`:210-221`)
-    withListing(_.filter { p =>
-      val n = p.getFileName.toString
-      n == "_SUCCESS" || n.endsWith(".crc")
-    }).foreach(Files.deleteIfExists(_))
+      Files.createDirectories(dir)
+      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    }
   }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val w = Files.walk(p)
+      try w.iterator().asScala.toList.reverse.foreach(Files.delete(_))
+      finally w.close()
+    }
 
   /** q06_sink_layout — driver-visible smoke for the sink contract (no SQL
     * oracle: the op writes files; LayoutSpec asserts the four quirks).

@@ -23,7 +23,6 @@ private[graft] object AdaptiveWidth {
     * `rowBytes` bytes each. */
   def forRows(s: SparkSession, rows: Long, rowBytes: Long = 32L): Int = {
     val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
-    if (sys.env.get("SPARK_GRAFT_ADAPTIVE_WIDTH").contains("off")) return cap
     val target = s.conf
       .get("spark.graft.batch.partitionBytes", (64L << 20).toString).toLong
     math.max(1L, math.min(cap.toLong,

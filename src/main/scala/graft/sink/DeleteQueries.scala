@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
   * orders [[ClusteredWrite]]-clustered into 16 range-disjoint files on
   * o_orderkey, then every key divisible by 1000 deleted through
   * [[TargetedDelete.deleteKeys]] — the footer-pruned surgical rewrite
-  * (only files whose min/max range can contain a target are touched;
-  * the rest stay byte-identical, which TargetedDeleteSpec pins at the
-  * byte level). The graded query aggregates the POST-DELETE table per
-  * order status; the DuckDB oracle computes the same aggregate from
-  * the raw orders table under `o_orderkey % 1000 <> 0` — a hash match
+  * (one staged write over the files whose min/max range can contain a
+  * target; the rest stay byte-identical, which TargetedDeleteSpec pins
+  * at the byte level). The graded query aggregates the POST-DELETE
+  * table per order status; the DuckDB oracle computes the same
+  * aggregate from the raw orders table under `o_orderkey % 1000 <> 0`
+  * — a hash match
   * proves the delete removed exactly the requested keys and not one
   * row more or less, across every file the rewrite did and did not
   * touch.
@@ -24,9 +25,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: the key list is a GDPR-style bounded request set (here
   * keyspace/1000 rows collected driver-side — deletion requests are
   * small by nature; a bulk purge is q216/q221's CDC territory, not
-  * this op); the delete's driver loop walks only footer-pruned
-  * candidate files; the graded read is an ordinary partial+final
-  * aggregate over the clustered table. Replays converge
+  * this op); the delete's one staged write reads only the
+  * footer-pruned candidate files; the graded read is an ordinary
+  * partial+final aggregate over the clustered table. Replays converge
   * (TargetedDelete is idempotent), so bench reps re-read a stable
   * fixture. */
 object DeleteQueries {

@@ -110,8 +110,7 @@ object StreamSinkGraded {
       // rule the monitor replays got in r17; every per-batch
       // compaction aggregate, routing count, and staged rewrite inside
       // foreachBatch inherits the stream session's width)
-      val ss = StreamWidth.sizedSession(s, s"$cdc/*.parquet",
-        "q315_merge_stream")
+      val ss = StreamWidth.sizedSession(s, s"$cdc/*.parquet")
       val schema = ss.read.parquet(s"$cdc/b0_updates.parquet").schema
       val changes = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -180,8 +179,7 @@ object StreamSinkGraded {
       // replay width from source bytes (r18, the [[StreamWidth]] rule):
       // the per-batch band screens, admissions, and index writes inside
       // foreachBatch inherit the stream session's width
-      val ss = StreamWidth.sizedSession(s, s"$src/*.parquet",
-        "q316_ingest_dedup")
+      val ss = StreamWidth.sizedSession(s, s"$src/*.parquet")
       val schema = ss.read.parquet(s"$src/b0.parquet").schema
       val stream = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$src/*.parquet")

@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * the stream session's static width too — so the session's
   * `spark.sql.shuffle.partitions` applies verbatim to EVERY batch. At
   * width 32 even a 4-row sentinel batch runs 32 tasks × (state-store
-  * load + delta commit + sink file) per stateful operator; the r17
-  * profile hook measured those fixed per-partition costs at ~90% of
+  * load + delta commit + sink file) per stateful operator; r17
+  * per-batch profiling measured those fixed per-partition costs at ~90% of
   * replay wall time. Since AQE cannot coalesce here, the width derives
   * from source bytes instead: one shuffle partition per
   * `spark.graft.stream.partitionBytes` of source (default 64 MB —
@@ -27,7 +27,7 @@ private[streaming] object StreamWidth {
 
   /** A cloned session whose shuffle width is derived from the bytes
     * under `glob`. */
-  def sizedSession(s: SparkSession, glob: String, tag: String): SparkSession = {
+  def sizedSession(s: SparkSession, glob: String): SparkSession = {
     val ss = s.newSession()
     val srcPath = new org.apache.hadoop.fs.Path(glob)
     val fs = srcPath.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -51,9 +51,6 @@ private[streaming] object StreamWidth {
     // per-action planning overhead — A/B'd at sf0.1: 3.66 → 3.00 s per
     // q315 merge batch with identical plans (r18)
     ss.conf.set("spark.sql.adaptive.enabled", "false")
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE"))
-      System.err.println(
-        s"[replay-profile] $tag srcBytes=$srcBytes width=$width")
     ss
   }
 }

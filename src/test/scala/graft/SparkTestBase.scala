@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (getOrCreate: suites run in
@@ -42,6 +43,36 @@ object SparkTestBase {
     try body finally old.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None)    => conf.unset(k)
+    }
+  }
+
+  /** Spark jobs `body` starts on this thread: its jobs carry a local
+    * property; a marker job afterwards flushes the asynchronous
+    * listener bus (events reach a listener in posting order). */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.jobProbe"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("body")   => jobs.incrementAndGet()
+          case Some("marker") => flushed.countDown()
+          case _              => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      try body finally sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      jobs.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
     }
   }
 }

@@ -5,11 +5,11 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.SparkTestBase.jobsDuring
 import graft.ops.T
 
 /** MERGE INTO mechanics the graded q233 aggregate cannot see: the
@@ -18,7 +18,7 @@ import graft.ops.T
   * convergent replay, the no-actual-hit tombstone no-op, the
   * compacted-batch and null-key guards, the all-rows-deleted empty
   * replacement, key-width independence, the per-batch Spark job
-  * budget, and crash heal. */
+  * budget, the overlapping-ranges refusal, and crash heal. */
 class MergeIntoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -58,36 +58,6 @@ class MergeIntoSpec extends AnyFunSuite {
   private def parquetFiles(out: String): Seq[java.io.File] =
     new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
-
-  /** Spark jobs `body` starts on this thread: its jobs carry a local
-    * property; a marker job afterwards flushes the asynchronous
-    * listener bus (events reach a listener in posting order). */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = "graft.spec.jobProbe"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
-          case Some("body")   => jobs.incrementAndGet()
-          case Some("marker") => flushed.countDown()
-          case _              => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      try body finally sc.setLocalProperty(tag, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not deliver the marker job")
-      jobs.get
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("matched update / not-matched insert / tombstone delete land on " +
     "exactly the routed files; everything else is byte-identical") {
@@ -283,5 +253,25 @@ class MergeIntoSpec extends AnyFunSuite {
     // stable re-read (the bench-reps contract)
     assert(MergeQueries.q233MergeUpsert(spark, dir).collect().toSeq ==
       got.toSeq)
+  }
+
+  test("a table whose file key ranges overlap is refused before " +
+    "anything is written") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-merge-spec-ovl-").toString
+    Seq(Seq(1L, 5L, 10L), Seq(3L, 7L, 20L)).foreach { ks =>
+      ks.map(k => (k, 0L)).toDF("k", "v").coalesce(1)
+        .write.mode("append").parquet(out)
+    }
+    assert(parquetFiles(out).length == 2)
+    val hashesBefore = fileHashes(out)
+    val e = intercept[IllegalArgumentException] {
+      MergeInto.merge(spark, out, "k", batch(Seq((5L, 9L, "U"))))
+    }
+    assert(e.getMessage.contains("overlap"), e.getMessage)
+    parquetFiles(out).foreach(f =>
+      assert(e.getMessage.contains(f.getName), e.getMessage))
+    assert(fileHashes(out) == hashesBefore)
+    assert(new java.io.File(out).list().forall(!_.startsWith(".merge")))
   }
 }

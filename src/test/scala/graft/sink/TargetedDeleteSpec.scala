@@ -9,12 +9,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.SparkTestBase.jobsDuring
 import graft.ops.T
 
 /** Targeted delete: pruning binds (most files untouched — and
   * untouched means BYTE-identical, the compliance claim), the keys are
-  * gone, every other row survives, and the no-actual-hit bounding-box
-  * case rewrites nothing. */
+  * gone, every other row survives, the no-actual-hit bounding-box
+  * case rewrites nothing, a stat-spanning unclustered table still
+  * deletes everywhere, an emptied file keeps a schema-only
+  * replacement, and the whole delete is one staged write. */
 class TargetedDeleteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -136,5 +139,63 @@ class TargetedDeleteSpec extends AnyFunSuite {
       Seq(ghost))
     assert(rep.rowsDeleted == 0 && rep.filesRewritten == 0)
     assert(fileHashes(out) == hashesBefore)
+  }
+
+  test("a delete with a local key list costs at most two Spark jobs") {
+    val out = freshTable()
+    val custs = spark.read.parquet(out).select("o_custkey").distinct()
+      .collect().map(_.getLong(0)).sorted
+    var rep: TargetedDelete.DeleteReport = null
+    val jobs = jobsDuring {
+      rep = TargetedDelete.deleteKeys(spark, out, "o_custkey",
+        Seq(custs(custs.length / 2)))
+    }
+    assert(rep.filesRewritten >= 1 && rep.rowsDeleted > 0, rep.toString)
+    assert(jobs <= 2, s"deleteKeys ran $jobs Spark jobs")
+  }
+
+  test("on an unclustered table every file is a candidate and the key " +
+    "leaves all of them") {
+    val out = Files.createTempDirectory("graft-tdel-").toString
+    T(spark, SparkTestBase.Sf0001, "orders")
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+      .repartition(4).write.mode("overwrite").parquet(out)
+    val before = spark.read.parquet(out)
+      .select(col("o_orderkey"), col("o_custkey"),
+        col("_metadata.file_name").as("file"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    val files = before.map(_._3).distinct
+    assert(files.length == 4)
+    // the customer with the most orders among those present in every file
+    val victim = before.groupBy(_._2).toSeq
+      .filter(_._2.map(_._3).distinct.length == files.length)
+      .maxBy(g => (g._2.length, g._1))._1
+    val rep = TargetedDelete.deleteKeys(spark, out, "o_custkey",
+      Seq(victim))
+    assert(rep == TargetedDelete.DeleteReport(4, 4, 4,
+      before.count(_._2 == victim).toLong), rep.toString)
+    val after = spark.read.parquet(out).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(after == before.filterNot(_._2 == victim)
+      .map(r => (r._1, r._2)).toSet)
+  }
+
+  test("deleting every key of one file leaves a schema-only replacement " +
+    "that reads back empty") {
+    val out = freshTable()
+    val schema = spark.read.parquet(out).schema
+    val first = Files.list(Paths.get(out)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq.minBy(_.toString)
+    val keys = spark.read.parquet(first.toString).select("o_custkey")
+      .collect().map(_.getLong(0)).toSeq
+    val total = spark.read.parquet(out).count()
+    val rep = TargetedDelete.deleteKeys(spark, out, "o_custkey",
+      keys.distinct)
+    assert(rep.filesAffected == 1 && rep.filesRewritten == 1 &&
+      rep.rowsDeleted == keys.length.toLong, rep.toString)
+    assert(Files.exists(first), "the emptied file keeps its name")
+    val emptied = spark.read.parquet(first.toString)
+    assert(emptied.schema == schema && emptied.count() == 0L)
+    assert(spark.read.parquet(out).count() == total - keys.length)
   }
 }

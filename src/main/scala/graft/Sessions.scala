@@ -15,7 +15,14 @@ import org.apache.spark.sql.SparkSession
   *    dispatches on the loaded physical type, so both the ns-long and
   *    the current `timestamp[us]` encodings work unchanged;
   *  - AQE left at defaults: runtime coalescing and skew-join splitting
-  *    are part of the 100 TB story, not something to disable locally.
+  *    are part of the 100 TB story, not something to disable locally;
+  *  - `fs.file.impl` pinned to [[NioLocalFileSystem]]: without Hadoop's
+  *    native library the stock local filesystem forks a `chmod` for every
+  *    file and directory it creates, about 20 per `Layout.writeDual` of
+  *    an extract. As a builder conf it is in the context's Hadoop
+  *    configuration from the start, so the `file:` instance the Hadoop
+  *    `FileSystem` cache holds is this one. A cluster writing to S3A or
+  *    HDFS is not affected.
   */
 object Sessions {
   def local(cpus: String): SparkSession = SparkSession.builder()
@@ -24,5 +31,6 @@ object Sessions {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     .getOrCreate()
 }

@@ -1,7 +1,6 @@
 package graft.sources.rfc
 
 import java.util
-import java.util.regex.Pattern
 
 import scala.jdk.CollectionConverters._
 
@@ -35,8 +34,11 @@ import graft.types.Ddic
   *    down into the call's `FIELDS`/`OPTIONS`/`ROWCOUNT` inputs — the RFC
   *    module's documented-but-unused-by-the-reference surface (`:71`,
   *    SURVEY.md §4.1);
-  *  - WA rows are split/trimmed/arity-checked like R4/R5 (`:135-149`);
-  *    malformed rows follow Spark's CSV/JSON convention instead of the
+  *  - WA rows are split/trimmed/arity-checked like R4/R5 (`:135-149`).
+  *    The split scans for the literal `delimiter` with `indexOf` and keeps
+  *    empty cells, as Python's `str.split` does; no regex is compiled per
+  *    row, and an empty `delimiter` is refused when the options are read.
+  *    Malformed rows follow Spark's CSV/JSON convention instead of the
   *    reference's side-channel: `mode=DROPMALFORMED` (default),
   *    `PERMISSIVE` (null row + `_corrupt_record` carrying the raw WA),
   *    or `FAILFAST`.
@@ -66,8 +68,11 @@ final case class RfcOptions(map: Map[String, String]) {
     map.collectFirst { case (key, v) if key.equalsIgnoreCase(k) => v }
   val table: String = get("table").getOrElse(
     throw new IllegalArgumentException("sap-rfc: 'table' option is required"))
-  /** backtick, as the reference chooses (`pyrfc_read_table.py:32`). */
+  /** backtick, as the reference chooses (`pyrfc_read_table.py:32`). An
+    * empty delimiter is refused: there is no empty cell separator to
+    * split a WA row on. */
   val delimiter: String = get("delimiter").getOrElse("`")
+  require(delimiter.nonEmpty, "sap-rfc: 'delimiter' option must not be empty")
   /** 100 000 rows/call, as the reference (`pyrfc_read_table.py:33`). */
   val pageSize: Int = get("pageSize").map(_.toInt).getOrElse(100000)
   require(pageSize > 0, s"sap-rfc: pageSize must be positive, got $pageSize")
@@ -435,7 +440,6 @@ class RfcPartitionReader(schema: StructType, opts: RfcOptions,
   extends PartitionReader[InternalRow] {
 
   private val backend = opts.newBackend
-  private val delimRe = Pattern.quote(opts.delimiter)
   // server-side FIELDS projection only when malformed rows are dropped:
   // PERMISSIVE/FAILFAST need the full-width WA so arity validation can't
   // be fooled by a malformed row that matches the pruned width
@@ -509,7 +513,7 @@ class RfcPartitionReader(schema: StructType, opts: RfcOptions,
   /** R4/R5 semantics: strip + split (trailing empties kept) + arity check
     * + per-cell trim; typed per DDIC code with per-value tolerance. */
   private def parse(wa: String): Option[InternalRow] = {
-    val parts = wa.strip().split(delimRe, -1)
+    val parts = RfcPartitionReader.split(wa.strip(), opts.delimiter)
     if (parts.length != pageFields.size) {
       errRows += 1
       opts.mode match {
@@ -536,4 +540,23 @@ class RfcPartitionReader(schema: StructType, opts: RfcOptions,
 
   override def get(): InternalRow = current
   override def close(): Unit = ()
+}
+
+object RfcPartitionReader {
+  /** `s` split on every occurrence of the non-empty literal `d`, scanning
+    * left to right without overlap, with leading, trailing and adjacent
+    * empty cells kept: exactly `s.split(Pattern.quote(d), -1)`, without
+    * compiling a pattern per row. */
+  private[rfc] def split(s: String, d: String): Array[String] = {
+    val cells = new util.ArrayList[String]
+    var from = 0
+    var at = s.indexOf(d)
+    while (at >= 0) {
+      cells.add(s.substring(from, at))
+      from = at + d.length
+      at = s.indexOf(d, from)
+    }
+    cells.add(s.substring(from))
+    cells.toArray(new Array[String](cells.size))
+  }
 }

@@ -218,6 +218,38 @@ class RfcSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(df.count() == 0)
   }
 
+  test("13: the test-1 fixture reads the same typed rows with delimiters " +
+    "that are regex metacharacters") {
+    MockRfcBackend.register("ZSALES",
+      MockTable(zfields, (1 to 5).map(zrow)))
+    // FLAG is binary: compare its bytes, not the array reference
+    def rows(delim: String): Seq[Seq[Any]] =
+      read("delimiter" -> delim).orderBy("DOCNUM").collect().toSeq
+        .map(_.toSeq.map {
+          case b: Array[Byte] => b.toSeq
+          case v => v
+        })
+    val backtick = rows("`")
+    assert(backtick.length == 5)
+    assert(rows("|") == backtick)
+    assert(rows("\\E|") == backtick)
+  }
+
+  test("14: an empty delimiter is refused, naming the option, instead " +
+    "of losing every row") {
+    MockRfcBackend.register("ZSALES", MockTable(
+      Seq(RfcField("DOCNUM", "N"), RfcField("MANDT", "C"),
+        RfcField("NOTE", "C")),
+      Seq(Seq("0000000001", "100", "a"), Seq("0000000002", "100", "b"),
+        Seq("0000000003", "100", "c"))))
+    for (mode <- Seq("DROPMALFORMED", "PERMISSIVE", "FAILFAST")) {
+      val e = intercept[IllegalArgumentException] {
+        read("delimiter" -> "", "mode" -> mode).collect()
+      }
+      assert(e.getMessage.contains("delimiter"), mode)
+    }
+  }
+
   // ---- R10 credential surface (reference pyrfc_read_table.py:91-117) ----
 
   private val conn = Map("ashost" -> "sap.example.internal",

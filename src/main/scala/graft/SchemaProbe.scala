@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
   * `events.parquet` with a new physical type for `ts`
   * (TIMESTAMP(NANOS) → timestamp[us]) and the drift surfaced as 13
   * opaque per-query `AnalysisException`s instead of one named line.
-  * Verify and Bench run this probe before the query sweep and print
+  * Verify runs this probe before the query sweep and prints
   * one line per mismatch, e.g.
   * `events.ts: expected bigint|timestamp|timestamp_ntz, got string`.
   *
@@ -88,7 +88,7 @@ object SchemaProbe {
       }
     }
 
-  /** Shared Verify/Bench preamble: prints one stderr line per drift. */
+  /** Verify's preamble: prints one stderr line per drift. */
   def check(spark: SparkSession, sfDir: String): Unit =
     report(spark, sfDir).foreach(l => System.err.println(s"[schema-drift] $l"))
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for session construction so Verify/Bench/tests agree on the
-  * engine contract:
+/** One place for session construction so Verify, ExtractJob and the
+  * tests agree on the engine contract:
   *
   *  - `spark.sql.shuffle.partitions` = cpu count — local mode; a real
   *    cluster deployment sizes this to ~2-3× total executor cores (or

@@ -12,8 +12,8 @@ object Verify {
     // Name any testdata schema drift up front (round 8's regression
     // surfaced as 13 opaque per-query errors) — one line per mismatch.
     SchemaProbe.check(spark, sfDir)
-    // Dev-only: comma-separated query-name filter for fast single-query
-    // iteration (mirrors Bench). The driver never sets it — unset = all.
+    // Comma-separated query-name filter for fast single-query
+    // iteration; unset = all.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { names =>

@@ -323,8 +323,8 @@ object Corpus {
     * both consumers (the distinct-doc frequency aggregate and the
     * position join-back) hang off that same exchange — Spark's
     * ReuseExchange collapses the two subtrees, so raw shingle rows
-    * cross the wire exactly once (PLANS.md shows the ReusedExchange
-    * node; DedupPipelineSpec pins it). The line stage's (doc, sid, md5)
+    * cross the wire exactly once (DedupPipelineSpec pins the
+    * ReusedExchange node). The line stage's (doc, sid, md5)
     * keys share their `repartition(k)` exchange the same way. The
     * excised frame — consumed by the segmentation AND the final
     * accounting — is localCheckpointed once (the q215 multi-consumer
@@ -422,8 +422,8 @@ object Corpus {
     corpusBuildStages(s, dir).manifest
 
   /** q317's intermediate frames, exposed so CorpusBuildSpec can pin
-    * each stage's nonvacuity and PlanAudit can print the executed
-    * shared-exchange subplans — same pattern as [[q310Excised]]'s
+    * each stage's nonvacuity and inspect the executed shared-exchange
+    * subplans — same pattern as [[q310Excised]]'s
     * split. `thr` is the driver-picked decile; every DataFrame is the
     * exact frame the manifest plan consumes. */
   private[graft] final case class CorpusBuildStages(

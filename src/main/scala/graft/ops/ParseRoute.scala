@@ -70,8 +70,8 @@ object ParseRoute {
     * checkpoint each consumer re-ran the lineitem scan AND the distinct
     * exchange, with the parse's split/concat filters pushed BELOW the
     * distinct onto every raw row — the measured plan carried three
-    * HashAggregate+Exchange distinct subtrees over the full table
-    * (plans/r17/q285_errata_replay_before.txt). In production this is
+    * HashAggregate+Exchange distinct subtrees over the full table.
+    * In production this is
     * exactly the staging write between the extract and its two sinks
     * (guide §3.3: materialize an intermediate consumed by several
     * branches); 3 scans + 3 distinct shuffles become 1 + an in-memory

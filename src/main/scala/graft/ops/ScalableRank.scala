@@ -66,19 +66,29 @@ object ScalableRank {
   }
 
   /** Shared first pass of the running-aggregate variants: range
-    * partition + local sort, with `_v` (the value cast to long)
-    * appended as the LAST column, frozen by ONE eager localCheckpoint.
-    * Every job below — the per-partition summary collect and the
-    * [[scanPass]] running scan — reads these exact partitions, so all
-    * consumers see the same range boundaries. */
-  private def sortedParts(df: DataFrame, valueCol: Column,
-                          sortExprs: Seq[Column]): DataFrame =
-    df.repartitionByRange(sortExprs: _*)
+    * partition + local sort, with the value cast to long appended as
+    * the LAST column, frozen by ONE eager localCheckpoint. Every job
+    * below — the per-partition summary collect and the [[scanPass]]
+    * running scan — reads these exact partitions, so all consumers see
+    * the same range boundaries. The value column takes a name no input
+    * column has (Spark resolves names case-insensitively), so it never
+    * replaces a user column the scan would then drop; the returned
+    * Column addresses it. An `outCol` that is already an input column
+    * is refused: the scan would emit two fields of that name. */
+  private def sortedParts(df: DataFrame, valueCol: Column, outCol: String,
+                          sortExprs: Seq[Column]): (DataFrame, Column) = {
+    def taken(n: String) = df.columns.exists(_.equalsIgnoreCase(n))
+    require(!taken(outCol),
+      s"ScalableRank: outCol '$outCol' is already a column of the input")
+    val v = Iterator.iterate("_sr_v")(_ + "_").find(!taken(_)).get
+    val parts = df.repartitionByRange(sortExprs: _*)
       .sortWithinPartitions(sortExprs: _*)
-      .withColumn("_v", valueCol.cast("long"))
+      .withColumn(v, valueCol.cast("long"))
       .localCheckpoint(true)
+    (parts, col(v))
+  }
 
-  /** One tiny summary row per checkpoint partition: `(pid, agg(_v))`,
+  /** One tiny summary row per checkpoint partition: `(pid, agg)`,
     * driver-collected (partition-count-sized, never data-sized).
     * `spark_partition_id()` evaluated on the checkpoint's ExistingRDD
     * scan IS the checkpoint RDD's partition index — the same index
@@ -95,7 +105,7 @@ object ScalableRank {
 
   /** The running scan itself (r18): one narrow `mapPartitions` over the
     * checkpointed partitions — emits every row of `parts` minus the
-    * trailing `_v`, plus `outCol` (LONG, nullable) computed by the
+    * trailing value column, plus `outCol` (LONG, nullable) computed by the
     * per-row `step(state, v) => (emitted, state')` fold seeded with
     * `init(partitionIndex)` (the driver-combined offset). Replaces the
     * previous `Exchange hashpartitioning(_pid)` + Sort + Window +
@@ -141,11 +151,11 @@ object ScalableRank {
                                 outCol: String,
                                 sortExprs: Column*): DataFrame = {
     passes.incrementAndGet()
-    val parts = sortedParts(df, valueCol, sortExprs)
+    val (parts, value) = sortedParts(df, valueCol, outCol, sortExprs)
     // null-tolerant (r13 review): a partition whose values are all
     // NULL yields a null max — it contributes nothing to the running
     // prefix but still receives an offset (its rows emit the carry)
-    val maxes = partSummaries(parts, max(col("_v")))
+    val maxes = partSummaries(parts, max(value))
     var acc = Long.MinValue
     val offsets = maxes.map { case (pid, t) =>
       val o = (pid, acc); t.foreach(v => acc = math.max(acc, v)); o
@@ -166,8 +176,8 @@ object ScalableRank {
                                 outCol: String,
                                 sortExprs: Column*): DataFrame = {
     passes.incrementAndGet()
-    val parts = sortedParts(df, valueCol, sortExprs)
-    val totals = partSummaries(parts, sum(col("_v")))
+    val (parts, value) = sortedParts(df, valueCol, outCol, sortExprs)
+    val totals = partSummaries(parts, sum(value))
     var acc = 0L
     val offsets = totals.map { case (pid, t) =>
       val o = (pid, acc); acc += t.getOrElse(0L); o
@@ -183,7 +193,7 @@ object ScalableRank {
     * `sortExprs` (the strictly-previous row's value; null on the global
     * first row — and wherever the previous row's VALUE is null, which
     * is why consumers detect first rows by rank, never by a null lag).
-    * Each partition's LAST row's value (one tiny `last(_v)` summary —
+    * Each partition's LAST row's value (one tiny `last` summary —
     * exact here because every pid group is aggregated by the single
     * task that scans that partition, in its sorted order) carries into
     * the next non-empty partition's first row via the [[scanPass]]
@@ -192,8 +202,8 @@ object ScalableRank {
   def withGlobalLag(df: DataFrame, valueCol: Column, outCol: String,
                     sortExprs: Column*): DataFrame = {
     passes.incrementAndGet()
-    val parts = sortedParts(df, valueCol, sortExprs)
-    val lasts = partSummaries(parts, last(col("_v"), ignoreNulls = false))
+    val (parts, value) = sortedParts(df, valueCol, outCol, sortExprs)
+    val lasts = partSummaries(parts, last(value, ignoreNulls = false))
     var carry: Option[Long] = None
     val offsets = lasts.map { case (pid, t) =>
       val o = (pid, carry); carry = t; o
@@ -230,7 +240,7 @@ object ScalableRank {
     * pid/rank extraction, the offsets broadcast join, the rank sum —
     * is map-side over that checkpoint. The old shape persisted the
     * input AND checkpointed the windowed output (two materializations
-    * plus the pid exchange between them). Bench: q37 2.15→1.19 s,
+    * plus the pid exchange between them). Measured: q37 2.15→1.19 s,
     * q268 (3 ntile passes) 1.11→0.64 s; every rank-path consumer keeps
     * its oracle hash. */
   private def withRankAndTotal(df: DataFrame, rnCol: String,

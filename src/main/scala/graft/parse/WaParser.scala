@@ -25,11 +25,15 @@ object WaParser {
   val DefaultDelimiter = "`"
 
   /** Adds `parts` (array of split fields, trailing empties kept — limit -1,
-    * matching Python's `str.split`) and `arity` columns. */
+    * matching Python's `str.split`) and `arity` columns. An empty
+    * delimiter is refused, as the `sap-rfc` reader refuses it: there is
+    * no empty cell separator to split a WA row on. */
   def withParsed(df: DataFrame, waCol: String,
-                 delimiter: String = DefaultDelimiter): DataFrame =
+                 delimiter: String = DefaultDelimiter): DataFrame = {
+    require(delimiter.nonEmpty, "WaParser: 'delimiter' must not be empty")
     df.withColumn("parts", split(col(waCol), Pattern.quote(delimiter), -1))
       .withColumn("arity", size(col("parts")))
+  }
 
   /** Good rows: arity == field count; fields projected out trimmed under
     * the given names (reference `:142,169` trim semantics). */

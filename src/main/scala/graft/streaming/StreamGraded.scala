@@ -33,15 +33,6 @@ import graft.streaming.EventStreams.SEvent
   */
 object StreamGraded {
 
-  /** Per-tag state footprint of the most recent replay — (operator,
-    * max numRowsTotal, max memoryUsedBytes) across its micro-batches.
-    * Bounded: one entry per graded query, a handful of operators each.
-    * ScaleProbe reads it to turn the scaladocs' bounded-state CLAIMS
-    * (2 longs/key, watermark-bounded join buffers) into measured facts
-    * in SCALING.md. */
-  private[graft] val stateStats =
-    scala.collection.concurrent.TrieMap[String, Seq[(String, Long, Long)]]()
-
   /** The shared replay harness: a parquet source replayed through a
     * real file streaming source under `Trigger.AvailableNow` (one batch
     * by default — see q296's scaladoc for why the graded contract
@@ -61,24 +52,8 @@ object StreamGraded {
   private def replay(s: SparkSession, schemaFrom: String, glob: String,
                      tag: String, maxFilesPerTrigger: Option[Int] = None)(
       monitor: org.apache.spark.sql.Dataset[SEvent] => DataFrame): DataFrame = {
-    // Scale-adaptive stream width (r17 optimization; guide §2): stateful
-    // micro-batches run with AQE DISABLED, so the session's static
-    // shuffle width applies verbatim to EVERY batch — at width 32 even a
-    // 4-row sentinel batch runs 32 tasks × (state-store load + delta
-    // commit + sink file) per stateful operator, and per-batch profiling
-    // measured those fixed per-partition costs at ~90% of replay wall
-    // time (q313: 3.4–6.3 s per 4-row batch). Since AQE cannot coalesce
-    // here, derive the width from source bytes instead: one shuffle
-    // partition per `spark.graft.stream.partitionBytes` of source
-    // (default 64 MB — guide §2.2's partition sizing), capped at the
-    // session's own configured width (the cluster ceiling: a deployment
-    // that sizes `spark.sql.shuffle.partitions` to its executor fleet
-    // keeps that as the maximum state fan-out), floor 1. The stream runs
-    // on a cloned session (same SparkContext, independent SQLConf) so
-    // batch queries on the caller's session are untouched. Partition
-    // count never changes WHAT a keyed stateful operator computes — only
-    // how many state stores hold the keys — and each replay starts a
-    // fresh checkpoint, so no restore ever sees a changed width.
+    // one shuffle partition per 64 MB of source, on a cloned session:
+    // stateful micro-batches run with AQE disabled (see `StreamWidth`)
     val ss = StreamWidth.sizedSession(s, glob)
     import ss.implicits._
     val schema = ss.read.parquet(schemaFrom).schema
@@ -97,23 +72,7 @@ object StreamGraded {
       .option("path", s"$scratch/out")
       .option("checkpointLocation", s"$scratch/ckpt")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    try {
-      q.awaitTermination()
-      // state footprint of the replay just run (max across batches per
-      // operator) — read by ScaleProbe's state table (r17, the r16
-      // verdict's item 5: measure streaming state, not just time).
-      // NOTE: recentProgress retains only the most recent ~100 progress
-      // updates (spark.sql.streaming.numRecentProgressUpdates) — ample
-      // for today's 1–4-batch replays; a future many-batch replay must
-      // switch this to a StreamingQueryListener or the stats silently
-      // truncate.
-      stateStats(tag) = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.toSeq
-          .map(o => (o.operatorName, o.numRowsTotal, o.memoryUsedBytes)))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (op, xs) =>
-          (op, xs.map(_._2).max, xs.map(_._3).max) }
-    } finally q.stop()
+    try q.awaitTermination() finally q.stop()
     // explicit schema: a zero-emission replay leaves no data files and
     // schema inference would throw; the monitor's plan already knows it
     s.read.schema(out.schema).parquet(s"$scratch/out")

@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   * per-batch profiling measured those fixed per-partition costs at ~90% of
   * replay wall time. Since AQE cannot coalesce here, the width derives
   * from source bytes instead: one shuffle partition per
-  * `spark.graft.stream.partitionBytes` of source (default 64 MB —
-  * guide §2.2's partition sizing), capped at the session's own
+  * [[graft.ops.AdaptiveWidth.TargetBytes]] of source (64 MB — guide
+  * §2.2's partition sizing), capped at the session's own
   * configured width (the cluster ceiling: a deployment that sizes
   * `spark.sql.shuffle.partitions` to its executor fleet keeps that as
   * the maximum fan-out), floor 1. The stream runs on a cloned session
@@ -39,11 +39,7 @@ private[streaming] object StreamWidth {
       .map(_.map(st =>
         if (st.isDirectory) fs.getContentSummary(st.getPath).getLength
         else st.getLen).sum).getOrElse(0L)
-    val targetBytes = ss.conf
-      .get("spark.graft.stream.partitionBytes", (64L << 20).toString).toLong
-    val sessionW = ss.conf.get("spark.sql.shuffle.partitions").toInt
-    val width = math.max(1L, math.min(sessionW.toLong,
-      (srcBytes + targetBytes - 1) / targetBytes)).toInt
+    val width = graft.ops.AdaptiveWidth.forBytes(ss, srcBytes)
     ss.conf.set("spark.sql.shuffle.partitions", width.toString)
     // AQE off on the CLONE only (batch sessions keep it): stateful
     // replays run with AQE engine-disabled anyway, and for the

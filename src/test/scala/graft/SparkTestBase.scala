@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (getOrCreate: suites run in
   * the single forked test JVM and reuse it). Same [[Sessions]] config as
-  * Verify/Bench — UTC, ns-as-long parquet reads, small shuffle width. */
+  * Verify — UTC, ns-as-long parquet reads, small shuffle width. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
     val s = Sessions.local("4")

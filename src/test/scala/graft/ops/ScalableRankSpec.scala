@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -107,6 +108,53 @@ class ScalableRankSpec extends AnyFunSuite {
       val locals = rs.map(_.getLong(1) & ((1L << 33) - 1)).sorted.toSeq
       assert(locals == (0L until locals.length.toLong),
         s"partition $pid local indices not contiguous from 0: $locals")
+    }
+  }
+
+  // An input that carries its own `_v` (the name the running passes
+  // once used for their internal value column), not last, with nulls.
+  private val own = (1 to 103).map { i =>
+    (i.toLong, 1000L + i,
+      if (i % 9 == 0) None else Some((i * 37 % 101).toLong), s"t$i")
+  }
+  private def ownDf = own.toDF("id", "_v", "amt", "tag")
+  private def longOpt(r: Row, i: Int) =
+    if (r.isNullAt(i)) None else Some(r.getLong(i))
+  private def rowsOf(df: DataFrame) = df.collect().toSeq
+    .map(r => (r.getLong(0), r.getLong(1), longOpt(r, 2), r.getString(3),
+      longOpt(r, 4)))
+    .sortBy(_._1)
+
+  test("exclusive cumsum keeps an input column named _v and folds " +
+    "the value column") {
+    val got = ScalableRank
+      .withGlobalCumsumExclusive(ownDf, col("amt"), "c", col("id"))
+    assert(got.columns.toSeq == Seq("id", "_v", "amt", "tag", "c"))
+    var acc = 0L
+    val want = own.map { case (id, v, amt, tag) =>
+      (id, v, amt, tag, amt.map { a => val o = acc; acc += a; o })
+    }
+    assert(rowsOf(got) == want)
+  }
+
+  test("global lag keeps an input column named _v and lags the value " +
+    "column") {
+    val got = ScalableRank.withGlobalLag(ownDf, col("amt"), "p", col("id"))
+    assert(got.columns.toSeq == Seq("id", "_v", "amt", "tag", "p"))
+    val want = own.zip(None +: own.map(_._3)).map {
+      case ((id, v, amt, tag), p) => (id, v, amt, tag, p)
+    }
+    assert(rowsOf(got) == want)
+  }
+
+  test("a running pass refuses an outCol that is already an input column") {
+    val passes: Seq[(DataFrame, String) => DataFrame] = Seq(
+      ScalableRank.withGlobalCumsumExclusive(_, col("amt"), _, col("id")),
+      ScalableRank.withGlobalCummaxExclusive(_, col("amt"), _, col("id")),
+      ScalableRank.withGlobalLag(_, col("amt"), _, col("id")))
+    for (pass <- passes) {
+      val e = intercept[IllegalArgumentException](pass(ownDf, "tag"))
+      assert(e.getMessage.contains("'tag'"))
     }
   }
 }

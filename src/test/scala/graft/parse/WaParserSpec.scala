@@ -49,4 +49,16 @@ class WaParserSpec extends AnyFunSuite {
     val e = WaParser.errRows(df, "wa", names.length).count()
     assert(g == 3 && e == 2)
   }
+
+  test("an empty delimiter is refused by goodRows and errRows, naming " +
+    "it, instead of splitting rows into characters") {
+    val df = Seq("a`b`c", "abc").toDF("wa")
+    val good = intercept[IllegalArgumentException] {
+      WaParser.goodRows(df, "wa", names, delimiter = "")
+    }
+    val err = intercept[IllegalArgumentException] {
+      WaParser.errRows(df, "wa", names.length, delimiter = "")
+    }
+    for (e <- Seq(good, err)) assert(e.getMessage.contains("delimiter"))
+  }
 }

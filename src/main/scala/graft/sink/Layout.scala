@@ -6,6 +6,7 @@ import java.util.concurrent.{ExecutionException, FutureTask}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,6 +30,11 @@ import org.apache.spark.sql.functions._
   * cluster scale a caller keeps Spark's one-file-per-task layout instead
   * (pass `singleFile = false`); the dated directory scheme is unchanged and
   * the cumulative count then lives only in [[WriteResult]].
+  *
+  * Staging, publish and cleanup run through `java.nio`, so `root` must be
+  * local: a plain path on a local default filesystem, or a `file:` URI
+  * (taken as its path). Any other filesystem is refused before a Spark
+  * job runs (RUNBOOK.md, "Storage layout").
   */
 object Layout {
 
@@ -78,10 +84,11 @@ object Layout {
     require(fmt == "json" || fmt == "parquet", s"unsupported fmt: $fmt")
     require(partitionCols.isEmpty || !singleFile,
       "partitionCols implies singleFile = false")
+    val local = localRoot(root, good.sparkSession)
 
-    val goodDir = dirPath(root, isErr = false, fmt, table, ts)
-    val errDir = dirPath(root, isErr = true, fmt, table, ts)
-    val staging = Paths.get(root, s".staging-${UUID.randomUUID()}")
+    val goodDir = dirPath(local, isErr = false, fmt, table, ts)
+    val errDir = dirPath(local, isErr = true, fmt, table, ts)
+    val staging = Paths.get(local, s".staging-${UUID.randomUUID()}")
     val goodStage = staging.resolve("good")
     val errStage = staging.resolve("err")
 
@@ -121,6 +128,19 @@ object Layout {
         }
       WriteResult(goodDir, errPath, goodRows, errRows, cumulative)
     } finally deleteTree(staging)
+  }
+
+  /** `root` as the local path that staging, publish and cleanup share with
+    * the Spark writes. A scheme-less root resolves against the default
+    * filesystem, so it too must be `file:`. */
+  private def localRoot(root: String, spark: SparkSession): String = {
+    val uri = new HPath(root).toUri
+    val scheme = Option(uri.getScheme).getOrElse(
+      FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration)
+        .getScheme)
+    require(scheme == "file", s"Layout.writeDual needs a local root (a " +
+      s"path or a file: URI); refused $root (RUNBOOK.md, Storage layout)")
+    if (uri.getScheme == null) root else uri.getPath
   }
 
   /** Writes `df` to `dir` and returns its row count, observed in the same

@@ -252,4 +252,47 @@ class LayoutSpec extends AnyFunSuite with TimeLimits {
     assert(!Files.exists(Paths.get(s"$root/result")))
     assert(!Files.exists(Paths.get(s"$root/result-err")))
   }
+
+  /** Every regular file under `root`, relative to it, without the hidden
+    * checksum files. */
+  private def landed(root: String): Seq[String] = {
+    val base = Paths.get(root)
+    val w = Files.walk(base)
+    try w.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(base.relativize(_).toString).filterNot(_.endsWith(".crc"))
+      .toSeq.sorted
+    finally w.close()
+  }
+
+  test("a file: URI root lands the same files as its plain path and " +
+    "leaves no staging dir") {
+    val plain = freshRoot()
+    val uriRoot = freshRoot()
+    Seq("json", "parquet").foreach { fmt =>
+      Layout.writeDual(good, err, plain, fmt, "ztab", ts)
+      val r = Layout.writeDual(good, err, s"file://$uriRoot", fmt, "ztab", ts)
+      assert(r.goodRows == 3 && r.errRows == 2)
+      assert(r.goodPath == Layout.dirPath(uriRoot, isErr = false, fmt,
+        "ztab", ts))
+    }
+    assert(landed(plain).size == 4)
+    assert(landed(uriRoot) == landed(plain))
+    assert(stagingLeft(uriRoot).isEmpty)
+  }
+
+  test("a root on any other filesystem is refused before a Spark job " +
+    "runs, and nothing is written") {
+    val dir = freshRoot()
+    val root = s"nosuch://$dir"
+    val jobs = SparkTestBase.jobsDuring {
+      val e = intercept[IllegalArgumentException] {
+        Layout.writeDual(good, err, root, "parquet", "ztab", ts)
+      }
+      assert(e.getMessage.contains(root) && e.getMessage.contains("RUNBOOK"))
+    }
+    assert(jobs == 0)
+    assert(fileNames(dir).isEmpty)
+    // java.nio would read the URI as a relative path under the cwd
+    assert(!Files.exists(Paths.get("nosuch:")))
+  }
 }

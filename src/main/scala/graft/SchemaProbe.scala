@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
+import graft.ops.T
+
 /** Loud schema-drift detection for the driver testdata.
   *
   * Round 8 burned entirely because the driver regenerated
@@ -77,11 +79,12 @@ object SchemaProbe {
     }
   }
 
-  /** Probes every expected table under `sfDir`; unreadable tables
-    * report as one line instead of throwing. */
+  /** Probes the schema [[T]] loads for every expected table
+    * under `sfDir`, so the probe covers exactly what the queries read;
+    * unreadable tables report as one line instead of throwing. */
   def report(spark: SparkSession, sfDir: String): Seq[String] =
     expected.keys.toSeq.sorted.flatMap { table =>
-      try diff(table, spark.read.parquet(s"$sfDir/$table.parquet").schema)
+      try diff(table, T(spark, sfDir, table).schema)
       catch {
         case e: Throwable =>
           Seq(s"$table: unreadable at $sfDir (${e.getClass.getSimpleName}: ${e.getMessage})")

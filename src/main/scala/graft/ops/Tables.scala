@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.sink.Footers
+
 /** Table loading for the driver testdata (TESTDATA.md).
   *
   * Event-time contract: queries never touch `events.ts` directly — they
@@ -26,8 +28,13 @@ object T {
     * copies; a grid change must happen in exactly one place). */
   val DayUs = 86400000000L
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The table `name` under `sfDir`, with the schema read from its
+    * parquet footer on the driver ([[graft.sink.Footers.schema]]): the
+    * schema `spark.read.parquet` infers, without its inference job. */
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(Footers.schema(spark, path)).parquet(path)
+  }
 
   /** The µs event-time accessor, dispatched on the loaded physical type
     * of `ts`. NTZ casts through TIMESTAMP before `unix_micros`: the

@@ -21,11 +21,12 @@ import org.apache.spark.sql.types._
   * every part of the contract is enforced loudly).
   *
   * Routing: the clustered layout's footers are read driver-side by
-  * [[TargetedDelete.listFooters]] (metadata-only, the same stats the
-  * scan planner prunes with; the table schema comes from the same
-  * footers) and the batch — bounded, broadcast-sized CDC — is collected
-  * ONCE; every change key routes to its FLOOR file by binary search
-  * over the sorted footer `lo` array: the file whose range contains the
+  * [[TargetedDelete.listFooters]] through [[Footers]] (metadata-only,
+  * the same stats the scan planner prunes with; the table schema comes
+  * from the same footers, read by the rule [[Footers]] documents) and
+  * the batch — bounded, broadcast-sized CDC — is collected ONCE; every
+  * change key routes to its FLOOR file by binary search over the
+  * sorted footer `lo` array: the file whose range contains the
   * key, or, for a key in a range gap / beyond the ends, the nearest
   * file below (first file for keys below everything). Rows only ever
   * join the file whose range already admits them, so range-DISJOINTNESS
@@ -96,8 +97,7 @@ object MergeInto {
         require(hi < lo, s"merge: $keyCol ranges of $f1 and $f2 overlap " +
           "— not a clustered table (re-cluster it with ClusteredWrite)")
     }
-    val tableSchema = TargetedDelete.schemaOf(spark,
-      (ranged.head._1, ranged.head._4))
+    val tableSchema = ranged.head._4.schema
     val tableCols = tableSchema.fieldNames
     require(changes.columns.toSet == tableCols.toSet + "op",
       s"merge: change batch must carry ${tableCols.mkString(",")} + op, " +

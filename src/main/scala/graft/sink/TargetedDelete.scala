@@ -2,15 +2,13 @@ package graft.sink
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
+
+import graft.sink.Footers.Footer
 
 /** Targeted key deletion over a clustered parquet table — the
   * right-to-be-forgotten operation: remove every row of a set of keys
@@ -27,9 +25,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * a bounded pool), [[rewrite]] (ONE staged Spark write over the
   * candidate files, per-file hit counts observed in the same pass,
   * then the driver-side `.bak`-first swaps of the files the caller
-  * picks) and [[recover]]. Footers are metadata-only reads (~KB per
-  * file — the same statistics the scan planner prunes with), so at
-  * scale the write reads the pruned candidate set, not the table. */
+  * picks) and [[recover]]. Footers, read by [[Footers]] (the one
+  * footer reader, which lake reads take their schema from too), are
+  * metadata-only reads (~KB per file — the same statistics the scan
+  * planner prunes with), so at scale the write reads the pruned
+  * candidate set, not the table. */
 object TargetedDelete {
 
   final case class DeleteReport(filesTotal: Int, filesAffected: Int,
@@ -62,18 +62,20 @@ object TargetedDelete {
     if (candidates.isEmpty) return DeleteReport(table.size, 0, 0, 0L)
     val files = candidates.map(_._1).zipWithIndex.map(_.swap).toMap
     val (hits, work) = rewrite(spark, dir, files,
-      schemaOf(spark, candidates.head), keyCol, Seq("D" -> keys), None)(
+      candidates.head._2.schema, keyCol, Seq("D" -> keys), None)(
       _.keys.map(_._1).toSeq.sorted)
     DeleteReport(table.size, files.size, work.size, hits.values.sum)
   }
 
   /** The parquet files of the table at `dir`, name-sorted, each with its
-    * [[Footer]]: [[recover]] first, then one listing; the footer opens
-    * are independent driver-side metadata reads, overlapped on a
-    * bounded pool (sequential, they cost file-count × open latency). */
+    * [[Footers.Footer]]: [[recover]] first, then one listing; the footer
+    * opens ([[Footers.footer]]) are independent driver-side metadata
+    * reads, overlapped on a bounded pool (sequential, they cost
+    * file-count × open latency). */
   private[sink] def listFooters(spark: SparkSession, dir: Path,
                                 keyCol: String): Seq[(Path, Footer)] = {
     val conf = spark.sessionState.newHadoopConf()
+    val sql = spark.sessionState.conf
     val fs = dir.getFileSystem(conf)
     recover(fs, dir)
     val files = fs.listStatus(dir).toSeq
@@ -82,17 +84,11 @@ object TargetedDelete {
     val pool = java.util.concurrent.Executors
       .newFixedThreadPool(math.max(1, math.min(8, files.length)))
     val ec = ExecutionContext.fromExecutor(pool)
-    try files.zip(files.map(f => Future(footer(conf, f, keyCol))(ec))
+    try files.zip(files
+      .map(f => Future(Footers.footer(conf, sql, f, keyCol))(ec))
       .map(Await.result(_, Duration.Inf)))
     finally pool.shutdown()
   }
-
-  /** The table schema Spark's writer stored in a file's footer, or (for
-    * files other writers produced) the schema a read infers. */
-  private[sink] def schemaOf(spark: SparkSession,
-                             file: (Path, Footer)): StructType =
-    file._2.sparkSchema
-      .getOrElse(spark.read.parquet(file._1.toString).schema)
 
   /** The keyed rewrite shared by [[deleteKeys]] and [[MergeInto]], over
     * the table `files` keyed by file index. ONE Spark write: every
@@ -200,44 +196,4 @@ object TargetedDelete {
         fs.delete(st.getPath, true)
       }
     }
-
-  /** What one footer open yields: the file's row count, the key
-    * column's (min, max) statistics (None when any row group lacks
-    * them) and the table schema Spark's writer stores in the footer
-    * (None for files other writers produced). */
-  private[sink] final case class Footer(rows: Long,
-                                        keyRange: Option[(Long, Long)],
-                                        sparkSchema: Option[StructType])
-
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-
-  private[sink] def footer(conf: Configuration, file: Path,
-                           keyCol: String): Footer = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val ranges = blocks.map { block =>
-        block.getColumns.asScala
-          .find(_.getPath.toDotString == keyCol)
-          .map(_.getStatistics)
-          .filter(st => st != null && st.hasNonNullValue)
-          .map(st => (st.genericGetMin.asInstanceOf[Number].longValue(),
-            st.genericGetMax.asInstanceOf[Number].longValue()))
-      }
-      val range =
-        if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
-        else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
-      val schema = Option(reader.getFooter.getFileMetaData
-        .getKeyValueMetaData.get(SparkSchemaKey))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-      Footer(blocks.map(_.getRowCount).sum, range, schema)
-    } finally reader.close()
-  }
-
-  /** The (min, max) footer statistics of an integral key column across
-    * all row groups of one parquet file; None when any row group lacks
-    * stats. */
-  private[sink] def keyRange(conf: Configuration, file: Path,
-                             keyCol: String): Option[(Long, Long)] =
-    footer(conf, file, keyCol).keyRange
 }

@@ -49,20 +49,34 @@ trait RfcBackend extends Serializable {
     * Offset paging without a server-side ordering is not snapshot-
     * consistent either way (documented reference flaw, SURVEY.md §4.1). */
   def tableRowCount(queryTable: String, options: Seq[String]): Option[Long]
+
+  /** Connection release (the logoff that ends [[open]]'s logon). The
+    * source calls it exactly once per opened backend, when the driver
+    * call or the partition reader that opened it is done. Default
+    * no-op, as for [[open]]. */
+  def close(): Unit = ()
 }
 
 /** Deterministic in-memory backend for tests (FIXTURES.md §B). Tables are
   * registered in a process-wide registry (executors share the JVM in
-  * local mode; the backend itself holds no state so it serializes
-  * trivially). Every `call` is recorded for pushdown-plumbing assertions
-  * (fixture scenario 5). */
+  * local mode; the backend itself holds only the connection it was
+  * opened with). Every `call` is recorded for pushdown-plumbing
+  * assertions (fixture scenario 5). */
 class MockRfcBackend extends RfcBackend {
   import MockRfcBackend._
 
+  private var connection: Option[RfcConnection] = None
+
   /** Records the handed-off connection so specs can assert the
     * credential plumbing end-to-end (option- and provider-based). */
-  override def open(connection: Option[RfcConnection]): Unit =
+  override def open(connection: Option[RfcConnection]): Unit = {
+    this.connection = connection
     connection.foreach(recordOpen)
+  }
+
+  /** Records the release of that connection, so specs can match every
+    * open with a close. */
+  override def close(): Unit = connection.foreach(recordClose)
 
   override def call(queryTable: String, delimiter: String, rowSkips: Long,
                     rowCount: Int, fields: Seq[String],
@@ -177,16 +191,21 @@ object MockRfcBackend {
   private val tables = TrieMap.empty[String, MockTable]
   private val callLog = new ArrayBuffer[Call]
   private val openLog = new ArrayBuffer[RfcConnection]
+  private val closeLog = new ArrayBuffer[RfcConnection]
 
   def register(name: String, table: MockTable): Unit = tables.put(name, table)
   def clear(): Unit = {
     tables.clear()
     callLog.synchronized(callLog.clear())
     openLog.synchronized(openLog.clear())
+    closeLog.synchronized(closeLog.clear())
   }
   def calls: Seq[Call] = callLog.synchronized(callLog.toList)
   def opens: Seq[RfcConnection] = openLog.synchronized(openLog.toList)
+  def closes: Seq[RfcConnection] = closeLog.synchronized(closeLog.toList)
   private def record(c: Call): Unit = callLog.synchronized(callLog += c)
   private def recordOpen(c: RfcConnection): Unit =
     openLog.synchronized(openLog += c)
+  private def recordClose(c: RfcConnection): Unit =
+    closeLog.synchronized(closeLog += c)
 }

@@ -51,7 +51,9 @@ class RfcTableProvider extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val conf = RfcOptions(options.asScala.toMap)
-    val meta = conf.newBackend.call(conf.table, conf.delimiter, 0, 0, Nil, Nil)
+    val backend = conf.newBackend
+    val meta = try backend.call(conf.table, conf.delimiter, 0, 0, Nil, Nil)
+    finally backend.close()
     val base = StructType(meta.fields.map(f =>
       StructField(f.fieldName, Ddic.toSpark(f.tpe, f.length, f.decimals))))
     if (conf.permissive) base.add(StructField(RfcOptions.CorruptCol, StringType))
@@ -353,9 +355,10 @@ class RfcCountReaderFactory(opts: RfcOptions, nCols: Int)
     new PartitionReader[InternalRow] {
       private var done = false
       private var row: InternalRow = _
+      private var backend: RfcBackend = _
       override def next(): Boolean = {
         if (done) return false
-        val backend = opts.newBackend
+        backend = opts.newBackend
         val n = backend.tableRowCount(opts.table, Nil).getOrElse {
           // server can't estimate: the reference's sequential short-page
           // termination loop, counting WA rows WITHOUT parsing them
@@ -377,7 +380,7 @@ class RfcCountReaderFactory(opts: RfcOptions, nCols: Int)
         true
       }
       override def get(): InternalRow = row
-      override def close(): Unit = ()
+      override def close(): Unit = if (backend != null) backend.close()
     }
 }
 
@@ -395,7 +398,9 @@ class RfcScan(prunedSchema: StructType, opts: RfcOptions,
     * estimate the (post-OPTIONS) row count; otherwise a single partition
     * running the reference's sequential short-page loop. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val est = opts.newBackend.tableRowCount(opts.table, fragments)
+    val backend = opts.newBackend
+    val est = try backend.tableRowCount(opts.table, fragments)
+    finally backend.close()
     est match {
       case Some(n0) =>
         val n = limit.fold(n0)(l => math.min(n0, l.toLong))
@@ -539,7 +544,7 @@ class RfcPartitionReader(schema: StructType, opts: RfcOptions,
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = backend.close()
 }
 
 object RfcPartitionReader {

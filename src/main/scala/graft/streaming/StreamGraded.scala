@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.{Corpus, T}
+import graft.sink.Footers
 import graft.streaming.EventStreams.SEvent
 
 /** The DRIVER-GRADED streaming surface (r15) — Structured Streaming
@@ -56,7 +57,7 @@ object StreamGraded {
     // stateful micro-batches run with AQE disabled (see `StreamWidth`)
     val ss = StreamWidth.sizedSession(s, glob)
     import ss.implicits._
-    val schema = ss.read.parquet(schemaFrom).schema
+    val schema = Footers.schema(ss, schemaFrom)
     val reader = ss.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n =>
       reader.option("maxFilesPerTrigger", n.toString))

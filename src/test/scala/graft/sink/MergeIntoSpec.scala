@@ -89,8 +89,8 @@ class MergeIntoSpec extends AnyFunSuite {
     val conf = spark.sessionState.newHadoopConf()
     val ranges = new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".parquet"))
-      .flatMap(f => TargetedDelete.keyRange(conf,
-        new org.apache.hadoop.fs.Path(f.toString), "k"))
+      .flatMap(f => Footers.footer(conf, spark.sessionState.conf,
+        new org.apache.hadoop.fs.Path(f.toString), "k").keyRange)
       .sortBy(_._1)
     ranges.sliding(2).foreach {
       case Array((_, hi1), (lo2, _)) =>
@@ -170,7 +170,8 @@ class MergeIntoSpec extends AnyFunSuite {
     assert(first.exists(), "the emptied file keeps its name")
     val conf = spark.sessionState.newHadoopConf()
     val emptied = new org.apache.hadoop.fs.Path(first.toString)
-    assert(TargetedDelete.keyRange(conf, emptied, "k").isEmpty)
+    assert(Footers.footer(conf, spark.sessionState.conf, emptied, "k")
+      .keyRange.isEmpty)
     val emptyRead = spark.read.parquet(first.toString)
     assert(emptyRead.schema == schema && emptyRead.isEmpty)
     val afterDelete = snapshot(out)

@@ -7,8 +7,20 @@ For each seed, runs `perfbench/run.py --workload <workload> --seed <seed>
 --seconds 10 --trace 0` once in <parent_dir> and once in this checkout,
 alternating which side runs first. Then prints, per end-to-end metric of
 BENCHMARK.json, both sides' medians, the parent's quartile spread (q3 - q1)
-and how many pairs the change won (ties count for neither side), and flags
-every run that was not `correct`. Make the parent checkout with
+and how many pairs the change won (ties count for neither side), then a
+verdict line per metric, and flags every run that was not `correct`.
+Verdicts, from each metric's `better` and `bound` in BENCHMARK.json:
+
+  gain           the change won at least 9/10 of the pairs, and its median
+                 is better than the parent's by more than the parent's
+                 quartile spread;
+  worse          the change's median is worse than the parent's by more
+                 than bound x the parent's median;
+  unresolved     neither, and the parent's spread is wider than that
+                 bound, unless every change run beat every parent run;
+  no regression  otherwise.
+
+Make the parent checkout with
 `git archive <sha> | tar -x -C <parent_dir>`; each side builds on its first
 run. The script only calls the benchmark; it changes nothing in it.
 """
@@ -40,6 +52,23 @@ def quartiles(xs):
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], q[2]
+
+
+def verdict(par, chg, better, bound):
+    """The verdict line's word for one metric (see the module docstring)."""
+    sign = 1 if better == "higher" else -1
+    wins = sum(1 for a, b in zip(par, chg) if sign * (b - a) > 0)
+    lo, hi = quartiles(par)
+    gain = sign * (statistics.median(chg) - statistics.median(par))
+    limit = bound * abs(statistics.median(par))
+    if wins >= 0.9 * len(par) and gain > hi - lo:
+        return "gain"
+    if -gain > limit:
+        return "worse"
+    if hi - lo > limit and not all(sign * (b - a) > 0
+                                   for a in par for b in chg):
+        return "unresolved"
+    return "no regression"
 
 
 def main():
@@ -77,6 +106,8 @@ def main():
               f"[q1 {lo:.4g} q3 {hi:.4g}, spread {hi - lo:.4g}]  "
               f"change median {statistics.median(chg):.4g}  "
               f"change better in {wins}/{len(done)} pairs")
+        print(f"{name:12s} verdict: "
+              f"{verdict(par, chg, m['better'], m['bound'])}")
     bad = [(s, side) for s, p in zip(seeds, pairs) for side in p
            if not (p[side] and p[side]["correct"] and p[side]["failed"] == 0)]
     print("runs not correct: " +

@@ -4,15 +4,18 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.Row
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types._
 import org.scalatest.concurrent.TimeLimits
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
 import graft.SparkTestBase
+import graft.sources.rfc.{MockRfcBackend, RfcField, RfcPage}
+import graft.sources.rfc.MockRfcBackend.MockTable
 
 /** q06 sink-layout quirks (SURVEY.md §2.3 q06 / R7–R9; reference
   * `pyrfc_read_table.py`): dated `result[-err]/<fmt>/<table>/<ts>/` dirs
@@ -295,4 +298,165 @@ class LayoutSpec extends AnyFunSuite with TimeLimits {
     // java.nio would read the URI as a relative path under the cwd
     assert(!Files.exists(Paths.get("nosuch:")))
   }
+
+  /** Every column type the byte-identity case covers, with nulls. */
+  private def typed: DataFrame = {
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("i", IntegerType),
+      StructField("amt", DecimalType(15, 2)), StructField("d", DateType),
+      StructField("t", TimestampType), StructField("x", DoubleType),
+      StructField("s", StringType)))
+    val rows = Seq(
+      Row(1L, 7, BigDecimal("12345.67").bigDecimal,
+        java.sql.Date.valueOf("2024-02-29"),
+        java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789"), 1.5, "a"),
+      Row(2L, null, null, null, null, null, null),
+      Row(null, -3, BigDecimal("-0.05").bigDecimal,
+        java.sql.Date.valueOf("1999-12-31"),
+        java.sql.Timestamp.valueOf("1970-01-01 00:00:00"), -0.0, "é \"q\""))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The one part file `df.coalesce(1).write` lands for `fmt`. */
+  private def sparkPartFile(df: DataFrame, fmt: String): Array[Byte] = {
+    val dir = s"${freshRoot()}/ref"
+    df.coalesce(1).write.format(fmt).save(dir)
+    val parts = fileNames(dir).filter(_.startsWith("part-"))
+    assert(parts.size == 1, parts)
+    Files.readAllBytes(Paths.get(dir, parts.head))
+  }
+
+  test("landed parquet and json files are byte-identical to the part file " +
+    "df.coalesce(1).write lands, with rows and with none") {
+    // the last frame's source has no partition at all
+    val frames = Seq(typed, typed.limit(0),
+      spark.createDataFrame(java.util.List.of[Row](), typed.schema),
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], typed.schema))
+    for (fmt <- Seq("parquet", "json"); df <- frames) {
+      val root = freshRoot()
+      val r = Layout.writeDual(df, df, root, fmt, "ztyp", ts)
+      val good = Paths.get(r.goodPath, Layout.dataFileName("ztyp",
+        r.goodRows, fmt))
+      assert(Files.readAllBytes(good).sameElements(sparkPartFile(df, fmt)),
+        s"$fmt good side, ${r.goodRows} rows")
+      if (r.errRows > 0) {
+        val headerless = df.toDF(df.columns.indices.map(_.toString): _*)
+        val errFile = Paths.get(r.errPath.get, Layout.errFileName("ztyp", fmt))
+        assert(Files.readAllBytes(errFile)
+          .sameElements(sparkPartFile(headerless, fmt)), s"$fmt err side")
+      }
+      assert(stagingLeft(root).isEmpty)
+    }
+  }
+
+  test("a session maxRecordsPerFile smaller than a page does not split it") {
+    Seq("parquet", "json").foreach { fmt =>
+      val root = freshRoot()
+      val r = SparkTestBase.withConf(
+        "spark.sql.files.maxRecordsPerFile" -> "1") {
+        Layout.writeDual(good, err, root, fmt, "ztab", ts)
+      }
+      assert(r.goodRows == 3 && r.errRows == 2)
+      assert(fileNames(r.goodPath) == Seq(s"ztab3.$fmt"))
+      assert(fileNames(r.errPath.get) == Seq(s"ztab-err.$fmt"))
+      assert(spark.read.format(fmt).load(r.goodPath).count() == 3)
+      assert(spark.read.format(fmt).load(r.errPath.get).count() == 2)
+      assert(stagingLeft(root).isEmpty)
+    }
+    // the stream fixtures' single-file writer goes through the same task
+    val dest = freshRoot()
+    SparkTestBase.withConf("spark.sql.files.maxRecordsPerFile" -> "1") {
+      ScratchExport.writeSingleFile(good, dest, "b0.parquet", 0)
+    }
+    assert(fileNames(dest) == Seq("b0.parquet"))
+    assert(spark.read.parquet(s"$dest/b0.parquet").count() == 3)
+  }
+
+  test("each side's task reports the landed file's bytes and rows as its " +
+    "output metrics") {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.layoutMetrics"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("body")   => e.stageIds.foreach(stages.add)
+          case Some("marker") => flushed.countDown()
+          case _              => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) {
+          val m = e.taskMetrics.outputMetrics
+          written.add((m.bytesWritten, m.recordsWritten))
+        }
+    }
+    val root = freshRoot()
+    sc.addSparkListener(listener)
+    val r = try {
+      sc.setLocalProperty(tag, "body")
+      val r = try Layout.writeDual(good, err, root, "parquet", "ztab", ts)
+      finally sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      r
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    def size(dir: String, name: String) = Files.size(Paths.get(dir, name))
+    val landedFiles = Seq(
+      (size(r.goodPath, "ztab3.parquet"), r.goodRows),
+      (size(r.errPath.get, "ztab-err.parquet"), r.errRows))
+    assert(written.asScala.toSeq.sorted == landedFiles.sorted)
+  }
+
+  test("a good side failing mid-task while the err side reads several " +
+    "pages leaves no staging and publishes nothing") {
+    MockRfcBackend.register("ZSLOWERR", MockTable(
+      Seq(RfcField("WA", "C", 20)),
+      rows = (1 to 50).map(i => Seq(s"bad-$i"))))
+    val slowErr = spark.read.format("sap-rfc").option("table", "ZSLOWERR")
+      .option("backend", classOf[SlowPageRfcBackend].getName)
+      .option("pageSize", "10").load()
+    val boom = udf { (k: Long) =>
+      if (k == 2L) throw new IllegalStateException("good side boom")
+      k
+    }
+    // a range, not a local relation: the optimizer cannot fold the udf
+    // into the plan, so the good side fails inside its write task
+    val failingGood = spark.range(1, 4, 1, 1)
+      .select(boom(col("id")).as("k"))
+    val root = freshRoot()
+    val t0 = System.nanoTime()
+    val e = intercept[Exception] {
+      Layout.writeDual(failingGood, slowErr, root, "parquet", "zslow", ts)
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes(e).exists(_.getMessage.contains("good side boom")))
+    // the err side's 5 pages take at least 5 × the page delay
+    assert(System.nanoTime() - t0 >= 5 * SlowPageRfcBackend.DelayMs * 1000000L)
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(_.getName == "graft-layout-err-zslow"))
+    assert(stagingLeft(root).isEmpty)
+    assert(fileNames(root).isEmpty)
+  }
+}
+
+/** A [[MockRfcBackend]] whose every page call takes
+  * [[SlowPageRfcBackend.DelayMs]]: a source still reading when another
+  * write fails. */
+class SlowPageRfcBackend extends MockRfcBackend {
+  override def call(queryTable: String, delimiter: String, rowSkips: Long,
+                    rowCount: Int, fields: Seq[String],
+                    options: Seq[String]): RfcPage = {
+    if (rowCount > 0) Thread.sleep(SlowPageRfcBackend.DelayMs)
+    super.call(queryTable, delimiter, rowSkips, rowCount, fields, options)
+  }
+}
+
+object SlowPageRfcBackend {
+  val DelayMs = 200L
 }
